@@ -27,7 +27,7 @@ object SparkEntry {
         (split(col("s.text"), ",").getItem(0).cast("double") / 4.0).as("x"),
         (split(col("s.text"), ",").getItem(1).cast("double") / 4.0).as("y"),
         split(col("s.text"), ",").getItem(2).cast("double").as("value"))
-    SpatialJoin.pip(pts, polys, GeoTables.JoinLevel, broadcastPolys = true)
+    SpatialJoin.pip(pts, polys, GeoTables.JoinLevel, PipPlan.Broadcast)
       .groupBy(col("poly_doc"))
       .agg(count(lit(1)).as("n_pts"), round(sum(col("value")), 3).as("sum_val"))
   }
@@ -67,12 +67,13 @@ object SparkEntry {
         round(avg(col("value")), 3).as("avg_val"))
     }),
 
-    // same join, pure-bbox codegen refine + salting path must agree
+    // same join through the uniformly salted plan (every cell fans out 4
+    // ways) must agree
     "q_zonal_stats_salted" -> ((s, dir) => {
-      val joined = SpatialJoin.pipSalted(
+      val joined = SpatialJoin.pip(
         GeoTables.points(s, dir),
         GeoTables.zones(s, dir).select(col("zone_id"), col("wkt")),
-        GeoTables.JoinLevel, salt = 4)
+        GeoTables.JoinLevel, PipPlan.Salted(4))
       joined.groupBy(col("zone_id")).agg(
         count(lit(1)).as("n_pts"),
         sum(col("value")).as("sum_val"))
@@ -81,10 +82,10 @@ object SparkEntry {
     // same join again through the per-cell ADAPTIVE salting path (north
     // rule: repartition by measured cell density, salt only hot cells)
     "q_zonal_stats_adaptive" -> ((s, dir) => {
-      val joined = AdaptiveSkew.pipAdaptive(
+      val joined = SpatialJoin.pip(
         GeoTables.points(s, dir),
         GeoTables.zones(s, dir).select(col("zone_id"), col("wkt")),
-        GeoTables.JoinLevel, targetRowsPerTask = 2000L)
+        GeoTables.JoinLevel, PipPlan.Adaptive(targetRowsPerTask = 2000L))
       joined.groupBy(col("zone_id")).agg(
         count(lit(1)).as("n_pts"),
         sum(col("value")).as("sum_val"))

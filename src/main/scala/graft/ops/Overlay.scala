@@ -32,7 +32,10 @@ object Overlay {
     * inputs the result is integer-exact, matching both JTS difference area
     * and the oracle's unit-cell count bit for bit. */
   private[graft] def rectDiffArea(sx0: Double, sy0: Double, sx1: Double, sy1: Double,
-                                  cuts: Array[Array[Double]]): Double = {
+                                  cuts0: Array[Array[Double]]): Double = {
+    // a zero-width cut covers no area, and its slab index would make it
+    // leave the active set before it enters
+    val cuts = cuts0.filter(c => c(2) > c(0))
     if (cuts.isEmpty) return (sx1 - sx0) * (sy1 - sy0)
     val xs = (Array(sx0, sx1) ++ cuts.flatMap(c => Array(c(0), c(2)))).distinct.sorted
     val k = cuts.length

@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   * length (explode factor ~2) — a bucket far below interval length
   * over-replicates intervals, far above it dilates candidates. Skewed
   * hot buckets are ordinary equi-join skew: AQE's skew-join split
-  * applies, as does [[AdaptiveSkew]]-style salting if a bucket is
+  * applies, as does `PipPlan.Adaptive`-style salting if a bucket is
   * pathologically dense.
   *
   * Columns must be numeric (days, seconds — caller casts); left/right

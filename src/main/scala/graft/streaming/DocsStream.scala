@@ -6,7 +6,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.io.GeoTables
-import graft.ops.SpatialJoin
+import graft.ops.{PipPlan, SpatialJoin}
 
 /** Structured-Streaming ingest of the interleaved docs table (SURVEY.md
   * §2.11 — the reference has only chunked-batch incrementality; we expose
@@ -53,7 +53,7 @@ object DocsStream {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val joined = SpatialJoin.pip(batch, polys, GeoTables.JoinLevel,
-          broadcastPolys = true)
+          PipPlan.Broadcast)
         joined.groupBy(col("zone_id"))
           .agg(count(lit(1)).as("n_pts"), sum(col("value")).as("sum_val"))
           .withColumn("batch_id", lit(batchId))

@@ -26,7 +26,7 @@ class Ops4Spec extends SparkSpec {
   test("adaptive salted PIP equals plain PIP on a Zipfian distribution") {
     import spark.implicits._
     // Zipfian points: most mass in one hot cell around (50,50)
-    val pts = spark.range(30000).map { i =>
+    val zipf = spark.range(30000).map { i =>
       val u = SplitMix64.uniform(i, 7L)
       val hot = u < 0.8
       val x = if (hot) 50.0 + SplitMix64.uniform(i, 11L) * 0.9
@@ -35,14 +35,30 @@ class Ops4Spec extends SparkSpec {
               else SplitMix64.uniform(i, 19L) * 100.0
       (i, x, y, 1.0)
     }.toDF("point_id", "x", "y", "value")
-    val polys = GeoTables.zones(spark, sf001).select(col("zone_id"), col("wkt"))
-    val plain = SpatialJoin.pip(pts, polys, GeoTables.JoinLevel)
-      .select("zone_id", "point_id")
-    val adaptive = AdaptiveSkew.pipAdaptive(pts, polys, GeoTables.JoinLevel,
-      targetRowsPerTask = 1000L)
-    assert(rowSet(adaptive.select("zone_id", "point_id")) == rowSet(plain))
+    val zones = GeoTables.zones(spark, sf001)
+    // every fixture zone is a rectangle (gen_geom NULL); a triangle per zone,
+    // built from its bbox, sends the JTS refine through every plan as well
+    val tris = zones.select((col("zone_id") + 1000000L).as("zone_id"),
+      format_string("POLYGON((%s %s,%s %s,%s %s,%s %s))",
+        Seq("zxmin", "zymin", "zxmax", "zymin", "zxmin", "zymax", "zxmin", "zymin")
+          .map(col): _*).as("wkt"))
+    val layer = zones.select(col("zone_id"), col("wkt")).unionByName(tris)
+    val plans = Seq(PipPlan.Shuffle, PipPlan.Broadcast, PipPlan.Salted(4),
+      PipPlan.Adaptive(1000L))
+    for ((name, pts) <- Seq("zipf" -> zipf, "fixture" -> GeoTables.points(spark, sf001))) {
+      val brute = rowSet(pts.crossJoin(layer)
+        .where(graft.functions.GeoFunctions.st_contains_xy(col("wkt"), col("x"), col("y")))
+        .select("zone_id", "point_id"))
+      assert(brute.exists(_.head.asInstanceOf[Long] >= 1000000L) &&
+        brute.exists(_.head.asInstanceOf[Long] < 1000000L), s"$name: both kinds match")
+      for (plan <- plans) {
+        val got = SpatialJoin.pip(pts, layer, GeoTables.JoinLevel, plan)
+          .select("zone_id", "point_id")
+        assert(rowSet(got) == brute, s"$name: $plan")
+      }
+    }
     // the hot cell actually got a salt factor > 1
-    val maxSalt = AdaptiveSkew.saltFactors(pts, GeoTables.JoinLevel, 1000L)
+    val maxSalt = SpatialJoin.saltFactors(zipf, GeoTables.JoinLevel, 1000L)
       .agg(max("salt")).collect()(0).getInt(0)
     assert(maxSalt > 1, s"expected hot-cell fanout, got max salt $maxSalt")
   }

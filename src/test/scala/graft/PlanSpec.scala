@@ -2,7 +2,11 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.io.GeoTables
-import graft.ops.SpatialJoin
+import graft.ops.{PipPlan, SpatialJoin}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
 /** Plan-shape regression guards: the perf-critical properties verified by
   * hand during the plan audit must not silently rot. */
@@ -11,21 +15,29 @@ class PlanSpec extends SparkSpec {
   test("PIP rect branch prunes wkt and uses a hash join keyed on cell") {
     val pts = GeoTables.points(spark, sf001)
     val z = GeoTables.zones(spark, sf001).select(col("zone_id"), col("wkt"))
-    val agg = SpatialJoin.pip(pts, z, GeoTables.JoinLevel)
-      .groupBy("zone_id").agg(count(lit(1)).as("n"))
-    val plan = agg.queryExecution.executedPlan.toString
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    for (mode <- Seq(PipPlan.Shuffle, PipPlan.Salted(4), PipPlan.Adaptive(1000L))) {
+      val agg = SpatialJoin.pip(pts, z, GeoTables.JoinLevel, mode)
+        .groupBy("zone_id").agg(count(lit(1)).as("n"))
+      val executed = agg.queryExecution.executedPlan
+      val plan = executed.toString
 
-    assert(plan.contains("ShuffledHashJoin") || plan.contains("BroadcastHashJoin"),
-      "cell equi-join must be a hash join")
-    // the exchanges feeding the join must not carry the WKT string: every
-    // Exchange line's column list should be wkt-free (wkt appears only in
-    // scans/projections of the general-polygon branch)
-    val badExchange = plan.linesIterator
-      .filter(_.trim.startsWith("+- Exchange hashpartitioning"))
-      .exists(_.contains("wkt"))
-    assert(!badExchange, "wkt leaked into a shuffle exchange")
-    // partial aggregation before the final exchange (map-side combine)
-    assert(plan.contains("HashAggregate"), plan)
+      assert(plan.contains("ShuffledHashJoin") || plan.contains("BroadcastHashJoin"),
+        s"$mode: cell equi-join must be a hash join")
+      // the hash exchanges feeding the join must carry neither the WKT
+      // string nor the st_env_rect struct, only flat envelope doubles and
+      // a NULL gen_geom for rectangles
+      val leaked = nodes(executed).collect {
+        case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[HashPartitioning] =>
+          e.child.output.map(_.name).filter(n => n == "wkt" || n == "pa")
+      }.flatten
+      assert(leaked.isEmpty, s"$mode: $leaked leaked into a shuffle exchange\n$plan")
+      // partial aggregation before the final exchange (map-side combine)
+      assert(plan.contains("HashAggregate"), plan)
+    }
   }
 
   test("sjoin emits pairs once: no dedup shuffle, no global window, hash joins only") {

@@ -35,26 +35,29 @@ class QueriesSpec extends SparkSpec {
 
   test("salted PIP join equals unsalted") {
     import graft.io.GeoTables
-    import graft.ops.SpatialJoin
+    import graft.ops.{PipPlan, SpatialJoin}
     val pts = GeoTables.points(spark, sf001)
     val z = GeoTables.zones(spark, sf001).select(col("zone_id"), col("wkt"))
     val a = SpatialJoin.pip(pts, z, GeoTables.JoinLevel)
       .select("zone_id", "point_id")
-    val b = SpatialJoin.pipSalted(pts, z, GeoTables.JoinLevel, salt = 4)
+    val b = SpatialJoin.pip(pts, z, GeoTables.JoinLevel, PipPlan.Salted(4))
       .select("zone_id", "point_id")
     assert(rowSet(a) == rowSet(b))
   }
 
-  test("pip equals pipBox on box zones (JTS refine vs codegen refine)") {
+  test("pip equals a brute-force strict-bbox reference on box zones") {
     import graft.io.GeoTables
     import graft.ops.SpatialJoin
     val pts = GeoTables.points(spark, sf001)
     val z = GeoTables.zones(spark, sf001)
-    val viaJts = SpatialJoin.pip(pts, z.select(col("zone_id"), col("wkt")),
+    val viaPip = SpatialJoin.pip(pts, z.select(col("zone_id"), col("wkt")),
       GeoTables.JoinLevel).select("zone_id", "point_id")
-    val viaBox = SpatialJoin.pipBox(pts, z.drop("wkt"), GeoTables.JoinLevel)
+    // every pair, no cell cover: independent of the cover and the refine
+    val brute = pts.crossJoin(z.drop("wkt"))
+      .where(col("zxmin") < col("x") && col("x") < col("zxmax") &&
+             col("zymin") < col("y") && col("y") < col("zymax"))
       .select("zone_id", "point_id")
-    assert(rowSet(viaJts) == rowSet(viaBox))
+    assert(rowSet(viaPip) == rowSet(brute))
   }
 
   test("kNN matches brute force") {
